@@ -80,25 +80,31 @@ def _tz_aware(t: dt.datetime) -> dt.datetime:
     return t if t.tzinfo is not None else t.replace(tzinfo=dt.timezone.utc)
 
 
+def _commit_markers(base: str) -> list[tuple[dt.datetime, str]]:
+    """(committed_at, run_id) of every commit marker, times tz-aware."""
+    p = _commits_path(base)
+    if not os.path.isdir(p):
+        return []
+    out = []
+    for f in os.listdir(p):
+        if not f.endswith(".json"):
+            continue
+        with open(os.path.join(p, f)) as fh:
+            doc = json.load(fh)
+        out.append(
+            (_tz_aware(dt.datetime.fromisoformat(doc["committed_at"])), doc["run_id"])
+        )
+    return out
+
+
 def list_committed_as_of(base: str, as_of: dt.datetime) -> set[str]:
     """TIME TRAVEL (round 3 — the Iceberg `AS OF TIMESTAMP` analogue on the
     parquet stand-in): run_ids whose commit marker was written at or before
     ``as_of``. Commit markers are the snapshot log, so a historical read is
     just a different committed-set filter — no data is rewritten, exactly
     like Iceberg snapshot isolation."""
-    p = _commits_path(base)
-    if not os.path.isdir(p):
-        return set()
     cutoff = _tz_aware(as_of)
-    out = set()
-    for f in os.listdir(p):
-        if not f.endswith(".json"):
-            continue
-        with open(os.path.join(p, f)) as fh:
-            doc = json.load(fh)
-        if _tz_aware(dt.datetime.fromisoformat(doc["committed_at"])) <= cutoff:
-            out.add(doc["run_id"])
-    return out
+    return {r for t, r in _commit_markers(base) if t <= cutoff}
 
 
 _RUN_ID_RE = re.compile(r"^[A-Za-z0-9._\-]+$")
@@ -364,29 +370,12 @@ def expire_runs(
     Expired urls leave the processed set — re-submitting those pages
     re-processes them, the standard artifact-retention trade. Surviving
     runs keep exactly-once semantics (pytest: expire -> resume)."""
-    def _aware(t: dt.datetime) -> dt.datetime:
-        # normalize naive timestamps to UTC so mixed-tz markers / operator
-        # input never raise "can't compare offset-naive and offset-aware"
-        return t if t.tzinfo is not None else t.replace(tzinfo=dt.timezone.utc)
-
-    commits = []
-    cp = _commits_path(base)
-    if not os.path.isdir(cp):
-        return []
-    for f in os.listdir(cp):
-        if not f.endswith(".json"):
-            continue
-        with open(os.path.join(cp, f)) as fh:
-            doc = json.load(fh)
-        commits.append(
-            (_aware(dt.datetime.fromisoformat(doc["committed_at"])), doc["run_id"])
-        )
-    commits.sort()
+    commits = sorted(_commit_markers(base))
     expired: list[str] = []
     if keep_last_n is not None and len(commits) > keep_last_n:
         expired.extend(r for _, r in commits[: len(commits) - keep_last_n])
     if older_than is not None:
-        cutoff = _aware(older_than)
+        cutoff = _tz_aware(older_than)
         expired.extend(r for t, r in commits if t < cutoff)
     expired_set = set(expired)
     if not expired_set:
@@ -399,7 +388,7 @@ def expire_runs(
     _purge_run_dirs(_partitions_path(base), only=expired_set)
     for r in sorted(expired_set):  # markers last: crash mid-purge re-expires
         try:
-            os.remove(os.path.join(cp, f"{r}.json"))
+            os.remove(os.path.join(_commits_path(base), f"{r}.json"))
         except FileNotFoundError:
             pass
     return sorted(expired_set)

@@ -14,13 +14,12 @@ partition-to-task mapping stable for lineage (the local stand-in for Iceberg
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fa_spark.stages.analyze import content_pages, with_analysis
+from fa_spark.stages.analyze import with_analysis
 from fa_spark.stages.dedup import exact_dedup
 
 DEFAULT_BUCKETS = 64
@@ -64,12 +63,8 @@ def default_session(
         # per-partition, so it is scale-adaptive, not a local[32] tune:
         # 64 MB build per partition is modest for multi-GB executors and
         # AQE falls back to sort-merge when partitions exceed it.
-        # Production values are env-overridable.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("FA_SPARK_SHJ_LOCAL_MAP", "64m"),
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.memory", "8g")
@@ -94,14 +89,10 @@ def analyze_pages(pages_df: DataFrame, cfg: JobConfig = JobConfig()) -> DataFram
     analyzed = with_analysis(pages_df).withColumn(
         "bucket", bucket_col("url", cfg.buckets)
     )
-    # narrow stats source (round 9): the canonical-election aggregate needs
-    # only (sha, url), both derivable from the page bytes without the
-    # analysis UDF — handing exact_dedup this projection keeps the
-    # broadcast-build subtree free of the Python stage's lineage
-    narrow = content_pages(pages_df).select(
-        F.sha2("html", 256).alias("sha"), "url"
-    )
-    deduped = exact_dedup(analyzed, key="sha", order="url", stats_src=narrow)
+    # the canonical-election aggregate reads only (sha, url); column pruning
+    # keeps the analysis UDF out of its subtree (one ArrowEvalPython in the
+    # plan — tests/test_plans.py)
+    deduped = exact_dedup(analyzed, key="sha", order="url")
     return deduped.withColumn("run_id", F.lit(cfg.run_id))
 
 

@@ -1,4 +1,4 @@
-"""Pure-Python core shared by the Spark pandas UDFs and the single-threaded oracle.
+"""Pure-Python core shared by the Spark UDFs and the single-threaded oracle.
 
 Every function here is deterministic: no wall clock, no ``random``, no Python
 ``hash()``. The byte-identical-extraction guarantee (BASELINE.json ``north_rule``)
@@ -8347,6 +8347,17 @@ def epub_encode(chapters: list, title: str = "") -> bytes:
     return buf.getvalue()
 
 
+ZIP_MIMETYPE_MAX = 64
+
+
+def _zip_mimetype(z) -> bytes:
+    """The first ZIP_MIMETYPE_MAX bytes of the 'mimetype' member, inflated
+    incrementally: z.read() would inflate a hostile member whole (a ~64 KB
+    deflate stream can expand to 64 MB) before any slice applied."""
+    with z.open("mimetype") as f:
+        return f.read(ZIP_MIMETYPE_MAX)
+
+
 def extract_zip_document_text(data: bytes) -> "ExtractResult":
     """Dispatch a zip payload to its document extractor by the same
     well-known member names _parse_zip_meta subtypes on; non-document
@@ -8363,10 +8374,7 @@ def extract_zip_document_text(data: bytes) -> "ExtractResult":
             is_epub = "META-INF/container.xml" in names
             if not is_epub and "mimetype" in names:
                 try:
-                    is_epub = (
-                        z.read("mimetype")[:64].strip()
-                        == b"application/epub+zip"
-                    )
+                    is_epub = _zip_mimetype(z).strip() == b"application/epub+zip"
                 except Exception:
                     is_epub = False
     except Exception:
@@ -8393,7 +8401,7 @@ def _parse_zip_meta(data: bytes) -> dict[str, str]:
         with _zipfile.ZipFile(_io2.BytesIO(data)) as z:
             names = z.namelist()
             if "mimetype" in names:
-                mimetype = z.read("mimetype")[:64].decode("ascii", "replace")
+                mimetype = _zip_mimetype(z).decode("ascii", "replace")
     except Exception:
         return {"zip:valid": "false"}
     out = {
@@ -12745,12 +12753,6 @@ def _quality_toks(text: str, toks: list[str]) -> dict:
         "stopword_ratio": (stop_hits / words) if words else 0.0,
         "mean_word_len": mean_wl,
     }
-
-
-def _shingles_toks(toks: list[str], k: int = 5) -> list[int]:
-    """shingles() on pre-computed tokens (identical output — both call the
-    shared vectorized _shingle_ids)."""
-    return _shingle_ids(toks, k)
 
 
 def _minhash_shingles(sh, num_hashes: int = 64) -> list[int]:

@@ -13,10 +13,11 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, LongType, StructType
 
 from fa_spark import pure
 from fa_spark import schema as S
+from fa_spark.stages import row_udf
 
 # compiled once per Python worker process
 _COMPILED_SIGS = pure.compile_signatures()
@@ -182,23 +183,27 @@ def _minhash_batch(text: pd.Series) -> pd.Series:
     )
 
 
-def _simhash_batch(text: pd.Series) -> pd.Series:
-    return pd.Series([_to_i64(pure.simhash64(t)) if t else 0 for t in text])
-
-
-def _fingerprint_batch(text: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            [_to_i64(h) for h in pure.rolling_fingerprint(t)] if t else []
-            for t in text
-        ]
-    )
-
-
 FP_FULL_MAX_TOKENS = 8192  # docs past this are excluded (symmetric in SQL)
 
+# standalone fingerprint UDFs for text that is already extracted
+# (DataType objects, not DDL strings — string parsing needs a live session).
+# minhash stays a pandas UDF for its whole-batch reduceat pass; the others
+# compute one value per row, so Spark's Arrow row UDF does the batching.
+minhash_udf = F.pandas_udf(_minhash_batch, ArrayType(LongType()))
 
-def _fingerprint_full_batch(text: pd.Series) -> pd.Series:
+
+@row_udf(LongType())
+def simhash_udf(text):
+    return _to_i64(pure.simhash64(text)) if text else 0
+
+
+@row_udf(ArrayType(LongType()))
+def fingerprint_udf(text):
+    return [_to_i64(h) for h in pure.rolling_fingerprint(text)] if text else []
+
+
+@row_udf(ArrayType(LongType()))
+def fingerprint_full_udf(text):
     """Dense variant: keep EVERY 8-token window hash (keep_mod=1), distinct.
     The shared-count between two docs then equals their shared distinct
     8-gram count — exactly recomputable in SQL (the correctness hook the
@@ -206,26 +211,12 @@ def _fingerprint_full_batch(text: pd.Series) -> pd.Series:
     remains the 100-TB scale path. The cap matches FP_FULL_MAX_TOKENS so the
     'shared == exact' invariant never silently truncates; the query bounds
     its universe to that token count on BOTH engines."""
-    out = []
-    for t in text:
-        hs = (
-            pure.rolling_fingerprint(t, window=8, keep_mod=1, cap=FP_FULL_MAX_TOKENS)
-            if t
-            else []
-        )
-        seen: dict[int, None] = dict.fromkeys(_to_i64(h) for h in hs)
-        out.append(list(seen))
-    return pd.Series(out)
-
-
-# standalone fingerprint UDFs for text that is already extracted
-# (DataType objects, not DDL strings — string parsing needs a live session)
-from pyspark.sql.types import ArrayType, LongType  # noqa: E402
-
-minhash_udf = F.pandas_udf(_minhash_batch, ArrayType(LongType()))
-simhash_udf = F.pandas_udf(_simhash_batch, LongType())
-fingerprint_udf = F.pandas_udf(_fingerprint_batch, ArrayType(LongType()))
-fingerprint_full_udf = F.pandas_udf(_fingerprint_full_batch, ArrayType(LongType()))
+    if not text:
+        return []
+    hs = pure.rolling_fingerprint(
+        text, window=8, keep_mod=1, cap=FP_FULL_MAX_TOKENS
+    )
+    return list(dict.fromkeys(_to_i64(h) for h in hs))
 
 
 def content_pages(pages_df):
@@ -235,10 +226,7 @@ def content_pages(pages_df):
     already-extracted text, sources.read_warc) analyze the encoded text
     instead: same fused pass, and sha/html_bytes follow the same bytes, so
     WET documents flow through the pipeline rather than vanishing as
-    empty (round-4 review: the text column was otherwise never consumed).
-    Shared by with_analysis and the narrow dedup-stats projection
-    (pipeline.analyze_pages, round 9) so both derive sha from identical
-    bytes."""
+    empty (round-4 review: the text column was otherwise never consumed)."""
     if "text" in pages_df.columns:
         # isNotNull FIRST: the common (html-bearing) case short-circuits
         # without touching the text column — the isNull-first form

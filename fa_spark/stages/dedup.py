@@ -70,12 +70,7 @@ def join_stats(df: DataFrame, stats: DataFrame, key: str) -> DataFrame:
     ).drop("__stats_key")
 
 
-def exact_dedup(
-    df: DataFrame,
-    key: str = "sha",
-    order: str = "url",
-    stats_src: DataFrame | None = None,
-) -> DataFrame:
+def exact_dedup(df: DataFrame, key: str = "sha", order: str = "url") -> DataFrame:
     """Adds is_canonical / dup_of / dup_count.
 
     Canonical row = first by ``order`` within the key group (deterministic —
@@ -87,15 +82,8 @@ def exact_dedup(
     round-2 window — identical output, but hot-key-skew-safe (dedup_stats).
     Round 4: the join back is null-safe (join_stats) so NULL-key rows —
     pages with NULL html — survive as one group instead of vanishing.
-    Round 9: ``stats_src`` lets the caller aggregate over a NARROW
-    relation that produces the identical (key, order) rows — e.g. the
-    pipeline derives (sha, url) straight from the page bytes instead of
-    from the full analysis relation; the stats subtree then shares no
-    lineage with the (heavy) probe side and the planner schedules the
-    broadcast build without touching the analysis stage (measured
-    3.5 s -> 2.0 s on the sf1.0 extraction job).
     """
-    stats = dedup_stats(stats_src if stats_src is not None else df, key, order)
+    stats = dedup_stats(df, key, order)
     return (
         join_stats(df, stats, key)
         .withColumn("is_canonical", F.col(order) == F.col("_first"))

@@ -15,19 +15,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-EMB_DIM = 64  # fixed embedding dimensionality of every corpus table
-
-
-def _dot(a, b, dim: int | None = None):
+def _dot(a, b):
     """Double dot product, left-associated accumulation (zip_with +
-    aggregate). ``dim`` is accepted for signature stability but the
-    higher-order-function form is used unconditionally: a round-9 A/B at
-    sf1.0 measured the 64-term unrolled GetArrayItem tree ~3× SLOWER
-    than zip_with (the giant expression overflows janino's method-size
-    budget, kills whole-stage codegen for the operator, and interpreted
-    evaluation of 192 boxed expression nodes loses to the HOF's single
-    array walk). The real win was hoisting the norms out of the per-pair
-    scoring — see brute_force_topk."""
+    aggregate). No unrolled form: a round-9 A/B at sf1.0 measured the
+    64-term unrolled GetArrayItem tree ~3× SLOWER than zip_with (the
+    giant expression overflows janino's method-size budget, kills
+    whole-stage codegen for the operator, and interpreted evaluation of
+    192 boxed expression nodes loses to the HOF's single array walk).
+    The real win was hoisting the norms out of the per-pair scoring —
+    see brute_force_topk."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -35,12 +31,12 @@ def _dot(a, b, dim: int | None = None):
     )
 
 
-def _norm(a, dim: int | None = None):
-    return F.sqrt(_dot(a, a, dim))
+def _norm(a):
+    return F.sqrt(_dot(a, a))
 
 
-def cosine_expr(a, b, dim: int | None = None):
-    return _dot(a, b, dim) / (_norm(a, dim) * _norm(b, dim))
+def cosine_expr(a, b):
+    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def brute_force_topk(
@@ -51,27 +47,25 @@ def brute_force_topk(
     qid_col: str = "query_id",
     qvec_col: str = "qvec",
     k: int = 5,
-    dim: int | None = EMB_DIM,
 ) -> DataFrame:
     """Exact cosine top-k per query. ``queries`` must be small (broadcast).
 
     Round 9: each side's norm is computed ONCE per row before the join
     (the joined form recomputed |v| and |q| per PAIR — 2/3 of the scoring
-    arithmetic was redundant), and the dot product uses the unrolled
-    codegen path (see _dot). Same floats in the same order, so the
+    arithmetic was redundant). Same floats in the same order, so the
     rounded cosines are bit-identical."""
     v = vectors.select(
-        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col), dim).alias("_vn")
+        F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("_vn")
     )
     q = queries.select(
-        F.col(qid_col), F.col(qvec_col), _norm(F.col(qvec_col), dim).alias("_qn")
+        F.col(qid_col), F.col(qvec_col), _norm(F.col(qvec_col)).alias("_qn")
     )
     joined = v.crossJoin(F.broadcast(q)).where(F.col(id_col) != F.col(qid_col))
     scored = joined.select(
         qid_col,
         id_col,
         F.round(
-            _dot(F.col(vec_col), F.col(qvec_col), dim)
+            _dot(F.col(vec_col), F.col(qvec_col))
             / (F.col("_vn") * F.col("_qn")),
             6,
         ).alias("cosine"),
@@ -99,8 +93,8 @@ def lsh_bucket(
     replaces the cross join at scale."""
     bits = [
         F.when(
-            _dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in p]),
-                 dim=len(p)) >= 0, "1"
+            _dot(F.col(vec_col), F.array(*[F.lit(float(x)) for x in p])) >= 0,
+            "1",
         ).otherwise("0")
         for p in planes
     ]
@@ -138,15 +132,15 @@ def lsh_topk(
     """Approximate top-k: candidates share an LSH bucket with the query
     (multi-probe: query side probes its bucket plus all 1-bit flips).
 
-    Round 9: per-side norms precomputed before the bucket join + unrolled
-    dot (see brute_force_topk) — bit-identical cosines."""
+    Round 9: per-side norms precomputed before the bucket join (see
+    brute_force_topk) — bit-identical cosines."""
     planes = hyperplane_signs(dim, n_planes, seed)
     v = lsh_bucket(vectors, vec_col, planes).withColumn(
-        "_vn", _norm(F.col(vec_col), dim)
+        "_vn", _norm(F.col(vec_col))
     )
     q = (
         lsh_bucket(queries, qvec_col, planes)
-        .withColumn("_qn", _norm(F.col(qvec_col), dim))
+        .withColumn("_qn", _norm(F.col(qvec_col)))
         .withColumn("bucket", F.explode(multiprobe_buckets("bucket", n_planes)))
     )
     joined = v.join(F.broadcast(q), "bucket").where(F.col(id_col) != F.col(qid_col))
@@ -154,7 +148,7 @@ def lsh_topk(
         qid_col,
         id_col,
         F.round(
-            _dot(F.col(vec_col), F.col(qvec_col), dim)
+            _dot(F.col(vec_col), F.col(qvec_col))
             / (F.col("_vn") * F.col("_qn")),
             6,
         ).alias("cosine"),
@@ -228,7 +222,7 @@ def _sq_l2(vec_col, c: list[float]):
     evaluates it once per centroid — an unrolled 16×64-term CASE cascade
     was measured to blow past janino's method-size limits and crash
     codegen — and it runs once per ROW, not once per candidate pair, so
-    it is not the hot arithmetic the unrolled _dot path targets."""
+    it is not the per-pair arithmetic _dot serves."""
     return F.aggregate(
         F.zip_with(
             F.col(vec_col) if isinstance(vec_col, str) else vec_col,
@@ -274,9 +268,8 @@ def ivf_topk(
 
     if centroids is None:
         centroids = kmeans_centroids(vectors, vec_col, k=n_lists, seed=seed, id_col=id_col)
-    dim = len(centroids[0]) if centroids else None
     v = vectors.withColumn("cell", _nearest_centroid(vec_col, centroids))
-    v = v.withColumn("_vn", _norm(F.col(vec_col), dim))
+    v = v.withColumn("_vn", _norm(F.col(vec_col)))
 
     # driver-side probe list per query cell ordering is data-independent:
     # compute each query's nprobe nearest centroids natively via exploded ranks
@@ -286,7 +279,7 @@ def ivf_topk(
         for i, c in enumerate(C)
     ]
     q = queries.select(
-        qid_col, qvec_col, _norm(F.col(qvec_col), dim).alias("_qn"), *dists
+        qid_col, qvec_col, _norm(F.col(qvec_col)).alias("_qn"), *dists
     )
     pairs = F.array(
         *[
@@ -306,7 +299,7 @@ def ivf_topk(
         qid_col,
         id_col,
         F.round(
-            _dot(F.col(vec_col), F.col(qvec_col), dim)
+            _dot(F.col(vec_col), F.col(qvec_col))
             / (F.col("_vn") * F.col("_qn")),
             6,
         ).alias("cosine"),
@@ -330,11 +323,11 @@ def embedding_near_dups(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via bucketed self-join.
 
-    Round 9: per-side norms computed once before the self-join + unrolled
-    dot (see _dot) — bit-identical cosines."""
+    Round 9: per-side norms computed once before the self-join (see
+    brute_force_topk) — bit-identical cosines."""
     planes = hyperplane_signs(dim, n_planes, seed)
     v = lsh_bucket(vectors, vec_col, planes).select(
-        "bucket", id_col, vec_col, _norm(F.col(vec_col), dim).alias("_n")
+        "bucket", id_col, vec_col, _norm(F.col(vec_col)).alias("_n")
     )
     a = v.select(
         "bucket", F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
@@ -351,7 +344,7 @@ def embedding_near_dups(
             "id_a",
             "id_b",
             F.round(
-                _dot(F.col("va"), F.col("vb"), dim)
+                _dot(F.col("va"), F.col("vb"))
                 / (F.col("_na") * F.col("_nb")),
                 6,
             ).alias("cosine"),

@@ -8,12 +8,12 @@ is the slug cascade (regex cascade pinned by golden fixtures).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from fa_spark import pure
+from fa_spark.stages import row_udf
 
 TOKEN_PATTERN = "[a-z0-9]+"
 GENERIC_TAGS = sorted(pure.GENERIC_TAGS)
@@ -63,19 +63,12 @@ def tags_array(df: DataFrame, id_col: str, text_col: str, k: int = 10) -> DataFr
     )
 
 
-@F.pandas_udf(StringType())
-def slug_udf(title: pd.Series, text: pd.Series) -> pd.Series:
-    return pd.Series(
-        [
-            pure.page_slug(t if t is not None else "", x if x is not None else "")
-            for t, x in zip(title, text)
-        ]
-    )
+@row_udf(StringType())
+def slug_udf(title, text):
+    return pure.page_slug(title or "", text or "")
 
 
-@F.pandas_udf(StringType())
-def filename_udf(description: pd.Series) -> pd.Series:
-    """M10 filename cascade as a vectorized column op."""
-    return pd.Series(
-        [pure.generate_filename(d if d is not None else "") for d in description]
-    )
+@row_udf(StringType())
+def filename_udf(description):
+    """M10 filename cascade as a column op."""
+    return pure.generate_filename(description or "")

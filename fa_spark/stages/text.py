@@ -2,7 +2,7 @@
 
 Language-ID, quality scoring, token counting: these are hot-path operators at
 100 TB, so they are pure Catalyst expressions (WholeStageCodegen, no Arrow
-transfer, no Python). The pandas-UDF variants in stages/analyze.py exist for
+transfer, no Python). The Python-UDF variants in stages/analyze.py exist for
 the byte-identical pages pipeline; THESE are the scale path over `text`
 columns that are already extracted.
 """

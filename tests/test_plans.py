@@ -16,7 +16,7 @@ def _plan(df) -> str:
 def test_media_queries_scan_one_column(spark):
     """The decode fixtures synthesize from doc_id alone — the parquet scan
     must read ONE column of the documents table, not all five (column
-    pruning through the pandas-UDF synthesis stage)."""
+    pruning through the row-UDF synthesis stage)."""
     from fa_spark.queries import q_jpeg_features, q_raster_features
 
     for q in (q_jpeg_features, q_raster_features):
@@ -55,6 +55,9 @@ def test_flagship_blob_never_shuffled(spark, pages_df):
     for line in plan.splitlines():
         if "Exchange" in line:
             assert "html" not in line, line
+    # the dedup-stats subtree reads only (sha, url): column pruning keeps
+    # the analysis UDF out of it, so the page is analyzed once
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_dataset_split_zero_exchange(spark):
@@ -64,24 +67,48 @@ def test_dataset_split_zero_exchange(spark):
     assert "Exchange" not in plan
 
 
-def test_round8_queries_fused_one_udf_shape(spark):
-    """The five round-8 queries share the fused one-UDF plan shape: the
-    parquet scan reads ONLY doc_id (pruning through the fixture-UDF
-    stage), the synthesized blob never crosses an Exchange, and there
-    is at most one shuffle in the whole plan."""
-    from fa_spark.queries import (
-        q_apng_frames, q_asset_meta, q_caption_meta, q_gif_composite,
-        q_ico_features, q_svg_meta, q_webp_lossless,
-    )
+MEDIA_ROUND_TRIPS = (
+    "media_plumbing", "image_features", "webp_lossless", "ico_features",
+    "jpeg_features", "progressive_jpeg", "raster_features", "audio_features",
+    "flac_features", "ogg_features", "mp3_features", "mp3_huff_features",
+    "mp3_short_features", "mp3_mixed_features", "mp3_intensity_features",
+    "mp3_ms_features", "mp2_features", "mp1_features", "wav_codec_features",
+    "video_features", "mjpeg_features", "mp4_frames", "mpeg1_frames",
+    "mpeg_ip_frames", "mpeg_ipb_frames", "image_ahash_dedup",
+)
+METADATA_WALKS = (
+    "svg_meta", "warc_roundtrip", "gif_frames", "asset_meta", "docx_extract",
+    "gif_composite", "caption_meta", "apng_frames", "audio_meta",
+    "video_meta", "image_compare",
+)
 
-    for q in (q_webp_lossless, q_ico_features, q_svg_meta, q_apng_frames,
-              q_asset_meta, q_caption_meta, q_gif_composite):
-        plan = _plan(q(spark, SF))
+
+def test_round8_queries_fused_one_udf_shape(spark):
+    """Every media round-trip query (one shared helper: synthesize a blob
+    per document, decode it through the multimodal stage) and every
+    metadata walk has the fused one-UDF plan shape: the parquet scan reads
+    ONLY what the blob is made of — doc_id, plus text for the plumbing
+    envelope — the blob never crosses an Exchange, and the round trip adds
+    at most one shuffle. A walk's fixture and parser chain into ONE Python
+    pass."""
+    from fa_spark.queries import REGISTRY
+
+    for name in MEDIA_ROUND_TRIPS + METADATA_WALKS:
+        plan = _plan(REGISTRY[name][0](spark, SF))
+        read = (
+            "struct<doc_id:bigint,text:string>" if name == "media_plumbing"
+            else "struct<doc_id:bigint>"
+        )
         scans = [l for l in plan.splitlines() if "ReadSchema" in l]
         assert scans, plan
         for s in scans:
-            assert "struct<doc_id:bigint>" in s, (q.__name__, s)
+            assert read in s, (name, s)
         for line in plan.splitlines():
             if "Exchange" in line:
-                assert "content" not in line, (q.__name__, line)
-        assert plan.count("Exchange") <= 2, (q.__name__, plan)
+                assert "content" not in line, (name, line)
+        # image_ahash_dedup's two-phase election over the decoded
+        # (doc_id, ahash) rows adds shuffles of its own
+        if name != "image_ahash_dedup":
+            assert plan.count("Exchange") <= 2, (name, plan)
+        if name in METADATA_WALKS:
+            assert plan.count("ArrowEvalPython") == 1, (name, plan)

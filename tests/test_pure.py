@@ -1911,6 +1911,41 @@ def test_epub_routing_and_budget():
     assert len(out.text) <= pure.EPUB_WALK_MAX_BYTES + (1 << 16)
 
 
+def test_epub_mimetype_bomb_bounded():
+    """A 'mimetype' member that inflates to 64 MB is sniffed from its
+    first bytes only: routing, extraction and the zip metadata walk all
+    stay far below the member's inflated size."""
+    import io
+    import tracemalloc
+    import zipfile
+
+    bomb = 64 << 20
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
+        with z.open("mimetype", "w", force_zip64=True) as f:
+            f.write(b"application/epub+zip")
+            pad = b" " * (1 << 20)
+            for _ in range(bomb // len(pad)):
+                f.write(pad)
+        z.writestr(
+            "c1.xhtml",
+            "<html><body><p>Nine words of chapter text sit right here."
+            "</p></body></html>",
+        )
+    blob = buf.getvalue()
+    assert len(blob) < bomb // 100
+    tracemalloc.start()
+    try:
+        ex = pure.extract_main_text(blob)
+        meta = pure.extract_metadata(blob)
+        _cur, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert ex.doc_type == "epub" and ex.status == "success"
+    assert meta["zip:subtype"] == "epub"
+    assert peak < bomb // 16, peak
+
+
 def test_woff_rejects_incomplete_zlib_table():
     """Round 9 (ADVICE r8): a compressed WOFF table whose zlib stream is
     truncated (or disagrees with origLength) is rejected, not parsed with
