@@ -1764,17 +1764,20 @@ FROM e
 #   top_2gram_frac  = chars covered by the most frequent 2-gram / joined
 #                     token chars (tie -> lexicographically smallest gram)
 #   dup_10gram_frac = 1 - distinct/total 10-gram windows (0 when <10 toks)
-# dup_10gram is pure per-row Catalyst; top_2gram uses the scale shape
-# (explode -> partial-agg groupBy -> per-doc top-1 window over gram COUNTS,
-# never the raw text) instead of an O(n²) per-row higher-order scan.
+# Both are one per-row Catalyst projection with no shuffle: top_2gram sorts
+# the doc's 2-grams and folds the longest run of equal grams in one linear
+# pass (only a strictly longer run wins, so a tie keeps the smallest gram).
+# The oracle below keeps the independent explode -> GROUP BY -> window
+# definition.
 # ---------------------------------------------------------------------------
 
 
 def q_doc_repetition(spark, sf_dir):
     from fa_spark.stages.text import repetition_metrics
 
-    docs = _spread(_t(spark, sf_dir, "documents"))
-    return repetition_metrics(docs, id_col="doc_id", text_col="text")
+    return repetition_metrics(
+        _t(spark, sf_dir, "documents"), id_col="doc_id", text_col="text"
+    )
 
 
 SQL_DOC_REPETITION = f"""

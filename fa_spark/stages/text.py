@@ -74,17 +74,28 @@ def token_count_exprs(text_col: str) -> list[Column]:
     return [ws.alias("n_tokens_ws"), bpe.alias("n_tokens_bpe")]
 
 
+def _windows(toks, n, k: int):
+    """The ``k``-token windows of the ``n``-token array ``toks``, each joined
+    by spaces (empty below k tokens). Built from k shifted slices so that the
+    lambda reads only its own argument: a filter on the caller's outputs is
+    pushed below the projection with the tokenizer inlined into every
+    reference, and a reference inside a lambda would re-tokenize the
+    document once per window."""
+    m = F.greatest(n - (k - 1), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(toks, j + 1, m) for j in range(k)])
+    return F.transform(
+        zipped, lambda w: F.concat_ws(" ", *[w[str(j)] for j in range(k)])
+    )
+
+
 def ngram_sets(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    """(id, grams array<string> distinct) — word n-gram shingle sets, natively:
-    transform over token indexes, concat_ws the window."""
+    """(id, grams array<string> distinct) — word n-gram shingle sets, natively
+    (``_windows``: the n shifted token slices, zipped and joined)."""
     toks = tokens_expr(text_col)
     df = df.select(F.col(id_col), toks.alias("_toks")).where(
         F.size("_toks") >= n
     )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("_toks") - (n - 1), F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice("_toks", i, n)),
-    )
+    grams = _windows(F.col("_toks"), F.size("_toks"), n)
     return df.select(id_col, F.array_distinct(grams).alias("grams"))
 
 
@@ -199,47 +210,57 @@ def repetition_metrics(
     top_2gram_frac = chars covered by the most frequent 2-gram / joined
     token chars (tie -> lexicographically smallest); dup_10gram_frac =
     1 - distinct/total 10-gram windows (0 below 10 tokens). Docs with <2
-    tokens are omitted. dup_10gram is pure per-row Catalyst; top_2gram
-    takes the scale shape — explode -> partial-agg groupBy -> per-doc
-    top-1 — rather than an O(n²) per-row higher-order scan."""
-    toks = tokens_expr(text_col)
-    base = df.select(
-        F.col(id_col),
-        toks.alias("_toks"),
-        F.length(F.concat_ws(" ", toks)).alias("_jlen"),
-    ).where(F.size("_toks") >= 2)
-    g2 = F.transform(
-        F.sequence(F.lit(1), F.size("_toks") - 1),
-        lambda i: F.concat_ws(" ", F.slice("_toks", i, 2)),
+    tokens are omitted.
+
+    One per-row projection: no explode, aggregate, window or shuffle, and
+    O(n log n) in a document's n tokens. The 2-grams are sorted and one
+    linear fold finds the longest run of equal grams; only a strictly
+    longer run replaces the best, so over ascending order a tie keeps the
+    smallest gram (the oracle's ORDER BY cnt DESC, gram ASC). A filter on
+    the outputs is pushed below the projection, onto 0- and 1-token rows,
+    so every slice and ratio here is total for them."""
+    base = df.select(F.col(id_col), tokens_expr(text_col).alias("_toks")).where(
+        F.size("_toks") >= 2
     )
-    g10 = F.when(
-        F.size("_toks") >= 10,
-        F.transform(
-            F.sequence(F.lit(1), F.size("_toks") - 9),
-            lambda i: F.concat_ws(" ", F.slice("_toks", i, 10)),
+    toks = F.col("_toks")
+    n = F.size(toks)
+
+    def step(acc, gram):
+        run = F.when(acc["gram"] == gram, acc["run"] + 1).otherwise(F.lit(1))
+        return F.struct(
+            gram.alias("gram"),
+            run.alias("run"),
+            F.when(run > acc["best_n"], gram).otherwise(acc["best"]).alias("best"),
+            F.greatest(run, acc["best_n"]).alias("best_n"),
+        )
+
+    no_gram = F.lit(None).cast("string")
+    top = F.aggregate(
+        F.sort_array(_windows(toks, n, 2)),
+        F.struct(
+            no_gram.alias("gram"),
+            F.lit(0).alias("run"),
+            no_gram.alias("best"),
+            F.lit(0).alias("best_n"),
         ),
+        step,
     )
+    dup10 = F.when(
+        n >= 10, 1 - F.size(F.array_distinct(_windows(toks, n, 10))) / (n - 9)
+    ).otherwise(F.lit(0.0))
     per_doc = base.select(
         id_col,
-        "_jlen",
-        F.explode(g2).alias("_gram"),
-        F.round(
-            F.coalesce(1 - F.size(F.array_distinct(g10)) / F.size(g10), F.lit(0.0)), 6
-        ).alias("dup_10gram_frac"),
+        F.length(F.concat_ws(" ", toks)).alias("_jlen"),
+        top.alias("_top"),
+        F.round(dup10, 6).alias("dup_10gram_frac"),
     )
-    counts = per_doc.groupBy(id_col, "_jlen", "dup_10gram_frac", "_gram").agg(
-        F.count("*").alias("_cnt")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy(F.col("_cnt").desc(), F.col("_gram").asc())
-    top = counts.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
-    return top.select(
+    return per_doc.select(
         id_col,
-        F.col("_gram").alias("top_2gram"),
-        F.round(F.col("_cnt") * F.length("_gram") / F.col("_jlen"), 6).alias(
-            "top_2gram_frac"
-        ),
+        F.col("_top.best").alias("top_2gram"),
+        F.round(
+            F.col("_top.best_n") * F.length("_top.best") / F.nullif("_jlen", F.lit(0)),
+            6,
+        ).alias("top_2gram_frac"),
         "dup_10gram_frac",
     )
 

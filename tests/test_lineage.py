@@ -51,6 +51,25 @@ def test_resume_after_partial_failure(spark, pages_df, base):
     assert out.groupBy("url").count().where("count > 1").count() == 0
 
 
+def test_increment_analyzes_each_new_page_once(spark, pages_df, base):
+    """One increment runs the analysis UDF exactly once per new or changed
+    page: the lineage writes after the cached analysis must not make Spark
+    rebuild the cache (an append to _lineage/processed, which the cached
+    plan reads through the anti-join, re-caches it by path)."""
+    from conftest import python_rows
+
+    pages = pages_df.select("url", "warc_ts", "html", "text", "lang").limit(120)
+    lineage.run_resumable(spark, pages.where(F.crc32("url") % 2 == 0), base,
+                          "run-1", TS1)
+    n_new = pages.count() - lineage.read_processed(spark, base).count()
+    assert n_new > 0
+    rows = python_rows(
+        spark, lambda: lineage.run_resumable(spark, pages, base, "run-2", TS2)
+    )
+    assert rows == n_new
+    assert lineage.read_analysis(spark, base).count() == pages.count()
+
+
 def test_changed_content_reprocessed(spark, pages_df, base):
     pages = pages_df.select("url", "warc_ts", "html", "text", "lang").limit(50)
     lineage.run_resumable(spark, pages, base, "run-1", TS1)

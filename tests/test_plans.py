@@ -112,3 +112,13 @@ def test_round8_queries_fused_one_udf_shape(spark):
             assert plan.count("Exchange") <= 2, (name, plan)
         if name in METADATA_WALKS:
             assert plan.count("ArrowEvalPython") == 1, (name, plan)
+
+
+def test_doc_repetition_per_row(spark):
+    """The repetition metrics are one per-row projection: no shuffle, no
+    window, no exploded 2-gram rows."""
+    from fa_spark.queries import REGISTRY
+
+    plan = _plan(REGISTRY["doc_repetition"][0](spark, SF))
+    for op in ("Exchange", "Window", "Generate"):
+        assert op not in plan, plan

@@ -5,6 +5,8 @@ and degenerate inputs."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from fa_spark.stages.text import chunk_documents, scrub_pii
 
@@ -191,3 +193,124 @@ def test_duplicate_passages_short_docs_excluded(spark):
     df = spark.createDataFrame(rows, "doc_id int, text string")
     # both docs are shorter than the window -> no windows, no spans
     assert duplicate_passages(df, window=10).count() == 0
+
+
+def _repetition_ref(text):
+    """Plain-Python Gopher repetition metrics over pure.tokenize: the most
+    frequent 2-gram (tie -> smallest), its char share of the joined tokens,
+    and the duplicated share of 10-gram windows. None below 2 tokens."""
+    from collections import Counter
+
+    from fa_spark import pure
+
+    toks = pure.tokenize(text)
+    if len(toks) < 2:
+        return None
+    grams = Counter(" ".join(toks[i:i + 2]) for i in range(len(toks) - 1))
+    gram, cnt = min(grams.items(), key=lambda kv: (-kv[1], kv[0]))
+    g10 = [" ".join(toks[i:i + 10]) for i in range(len(toks) - 9)]
+    dup = 1 - len(set(g10)) / len(g10) if g10 else 0.0
+    return gram, cnt * len(gram) / len(" ".join(toks)), dup
+
+
+def _check_repetition(spark, texts):
+    from fa_spark.stages.text import repetition_metrics
+
+    df = _df(spark, list(enumerate(texts)))
+    got = {r["doc_id"]: r for r in repetition_metrics(df).collect()}
+    want = {i: _repetition_ref(t) for i, t in enumerate(texts)}
+    assert set(got) == {i for i, w in want.items() if w is not None}
+    for i, r in got.items():
+        gram, top_frac, dup = want[i]
+        assert r["top_2gram"] == gram, (texts[i], r)
+        assert r["top_2gram_frac"] == pytest.approx(top_frac, abs=1.01e-6)
+        assert r["dup_10gram_frac"] == pytest.approx(dup, abs=1.01e-6)
+
+
+_VOCAB = ("b", "ab", "a9")  # 3 words: ties and repeats are the common case
+_LENGTHS = (0, 1, 2, 3, 9, 10, 11, 12, 19, 20, 21, 40)
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    st.lists(
+        st.lists(st.sampled_from(_VOCAB), max_size=40),
+        min_size=1,
+        max_size=8,
+    ),
+    st.sampled_from((" ", ", ", " -- ", "\n")),
+)
+def test_repetition_matches_python_reference(spark, docs, sep):
+    """repetition_metrics equals a plain-Python reference on 0-40-token
+    documents over a 3-word vocabulary (so 2-gram counts tie and 10-gram
+    windows repeat); every example also carries one doc of each boundary
+    length, 0/1 (omitted), 2, 9/10/11 (the 10-gram edge) and 40."""
+    fixed = [[_VOCAB[(i * i + n) % 3] for i in range(n)] for n in _LENGTHS]
+    _check_repetition(spark, [sep.join(d).upper() for d in docs + fixed])
+
+
+def test_repetition_filter_pushdown_total(spark):
+    """A filter on the outputs is pushed below the per-row projection and
+    so runs on 0- and 1-token rows too: it must not raise (a 1-token row
+    once made sequence(1, 0) count down into slice(_, 0, _))."""
+    from pyspark.sql import functions as F
+
+    from fa_spark.stages.text import repetition_metrics
+
+    df = _df(spark, [(0, ""), (1, "!!! ..."), (2, "word"), (3, "Word, word"),
+                     (4, None), (5, "a b a b a b a b a b a b")])
+    out = repetition_metrics(df).where(
+        (F.col("top_2gram_frac") > 0.1) | (F.col("dup_10gram_frac") > 0.1)
+    )
+    assert sorted(r["doc_id"] for r in out.collect()) == [3, 5]
+
+
+def test_repetition_long_document_linear(spark):
+    """One ~20k-token document matches the reference, plain and under a
+    pushed-down filter. A per-window rescan of the document (the old
+    explode shape, or a tokenizer inlined into a lambda) is quadratic and
+    takes minutes here; the linear shape takes about a second."""
+    import random
+    import time
+
+    from pyspark.sql import functions as F
+
+    from fa_spark.stages.text import repetition_metrics
+
+    rng = random.Random(7)
+    words = [f"w{i}" for i in range(40)]
+    toks = [rng.choice(words) for _ in range(18000)]
+    toks += toks[:2000]  # a repeated passage: dup_10gram_frac > 0
+    text = " ".join(toks)
+    t0 = time.perf_counter()
+    _check_repetition(spark, [text])
+    df = _df(spark, [(0, text)])
+    kept = repetition_metrics(df).where(F.col("dup_10gram_frac") > 0.05)
+    assert [r["doc_id"] for r in kept.collect()] == [0]
+    assert time.perf_counter() - t0 < 60
+
+
+def test_ngram_sets_filter_pushdown_linear(spark):
+    """jaccard_pairs and decontaminate filter ngram_sets on size(grams); the
+    filter is pushed below the projection with the tokenizer inlined, so a
+    lambda that read the token column re-tokenized the document once per
+    window (quadratic: about 10 s at 8k tokens). A 30k-token document must
+    stay linear and give its exact distinct 3-gram set."""
+    import random
+    import time
+
+    from pyspark.sql import functions as F
+
+    from fa_spark import pure
+    from fa_spark.stages.text import ngram_sets
+
+    rng = random.Random(11)
+    text = " ".join(rng.choice([f"w{i}" for i in range(40)]) for _ in range(30000))
+    toks = pure.tokenize(text)
+    want = {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+    df = _df(spark, [(0, text), (1, "two words"), (2, "")])
+    t0 = time.perf_counter()
+    rows = ngram_sets(df, "doc_id", "text").where(F.size("grams") > 0).collect()
+    assert time.perf_counter() - t0 < 60
+    assert [r["doc_id"] for r in rows] == [0]
+    assert sorted(rows[0]["grams"]) == sorted(want)
